@@ -343,7 +343,8 @@ def main() -> None:
                        stack.enter_context(tempfile.TemporaryDirectory()))
                 t0 = time.perf_counter()
                 write_index(
-                    build_index(load_table(spark, sf_dir, "documents")), tgt)
+                    build_index(load_table(spark, sf_dir, "documents"),
+                                term_buckets=16), tgt)
                 build_runs.append(time.perf_counter() - t0)
         timings["index_build_persist"] = round(min(build_runs), 3)
         medians["index_build_persist"] = round(sorted(build_runs)[1], 3)

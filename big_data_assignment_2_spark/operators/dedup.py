@@ -1346,7 +1346,7 @@ def _store_tombstones(spark: SparkSession, base_path: str):
     if no delete has ever been issued."""
     from .lifecycle import read_tombstones
 
-    return read_tombstones(spark, base_path, "__nid")
+    return read_tombstones(spark, base_path, "__nid", "bigint")
 
 
 # Read-time masking under the store's column names (shared mechanics).

@@ -19,10 +19,13 @@ Scale notes (100 TB):
   ``doc_freq_exact`` keeps the semantically-explicit countDistinct form, and
   at extreme scale ``approx_count_distinct`` is one argument away.
 - A3 never shuffles at all: doc length is a per-row expression.
-- Persisting postings partitioned by a hash bucket of ``term`` would give
-  storage-level pruning for term probes (the Cassandra-PK equivalent,
-  `app/app.py:48`); at harness scale a plain Parquet table + broadcast join
-  wins, so bucketing is left to the caller via ``sources.io.write_parquet``.
+- An index built to be persisted (``build_index(term_buckets=N)``) is
+  laid out for the store in the same exchange: tokens are hash-partitioned
+  on a bucket of ``term`` (the Cassandra-PK equivalent, `app/app.py:48`),
+  so ``persist.write_index`` writes one file per ``term_bucket=K/``
+  directory and a term probe prunes to its buckets' files.  In-flight
+  indexes leave ``term_buckets`` unset and keep the aggregate's full
+  shuffle parallelism.
 """
 
 from __future__ import annotations
@@ -124,22 +127,21 @@ def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                 term_buckets: int | None = None) -> dict[str, DataFrame]:
     """E2 collapsed (SURVEY.md §3): the three index tables as one lineage.
 
-    ``term_buckets`` (r18, VERDICT r17 #7 — guide §2.4 "two operations
-    keyed the same way can share one exchange"): when the index is built
-    TO BE PERSISTED bucket-partitioned, pass the same bucket count as
-    ``write_index``/``partition_postings_by_term_bucket``.  The token
-    stream is then hash-partitioned ONCE on (term_bucket, term) — the
-    postings aggregation's required clustering by (term_bucket, term,
-    doc_id) is satisfied by that partitioning (a subset of the grouping
-    key), so the aggregate adds NO second exchange, and the writer skips
-    its repartition because every row of a bucket is already co-located.
-    Build+persist pays one wide shuffle of the token stream instead of
-    two (tokens for the agg + the whole postings relation again for the
-    layout).  term_document then carries a ``term_bucket`` column
-    (metadata-tagged with the count so the writer can fail fast on a
-    mismatched bucket count); leave the default ``None`` for in-flight
-    (non-persisted) indexes — partitioning by ≤term_buckets distinct
-    values would cap the aggregation's parallelism for no layout gain.
+    ``term_buckets=N`` builds the index for a store written with the same
+    bucket count (``persist.write_index`` / ``append_to_index``).  The
+    token stream is hash-partitioned ONCE, into exactly N partitions on
+    ``term_bucket``; the postings aggregate groups by
+    (term_bucket, term, doc_id), a superset of that key, so it adds no
+    second exchange.  Every row of a bucket is then in one task, and the
+    writer emits exactly one file per ``term_bucket=K/`` directory (two
+    buckets whose hashes collide share a task but still get one file
+    each).  Contract: N is also the parallelism of the postings
+    aggregate, so pick it for the store's layout knowing it caps the
+    build's reduce side at N tasks.  ``term_document`` carries the
+    ``term_bucket`` column, tagged with N in its metadata so the writer
+    fails fast on a mismatched bucket count.  Leave the default ``None``
+    for in-flight indexes: their aggregate keeps the session's shuffle
+    parallelism.
     """
     tokens = tokenize_positions(docs, text_col, id_col)
     if term_buckets is not None:
@@ -149,7 +151,7 @@ def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                               term_bucket(F.col("term"), term_buckets)
                               .alias("term_bucket",
                                      metadata={"n_buckets": term_buckets}))
-                  .repartition(F.col("term_bucket"), F.col("term")))
+                  .repartition(term_buckets, F.col("term_bucket")))
         postings = tokens.groupBy("term_bucket", "term", "doc_id").agg(
             F.count("*").cast("int").alias("tf"),
             F.sort_array(F.collect_list("position")).alias("positions"),

@@ -27,6 +27,15 @@ from .lifecycle import (append_tombstones, atomic_rewrite,
                         drop_tombstones, hadoop_delete, hadoop_fs,
                         hadoop_rename, mask_tombstones, read_tombstones)
 
+# The columns BM25 reads from each relation of a persisted index, as the
+# writers below lay them out.  Probes read with these declared schemas: no
+# schema-inference job per relation, and the positions column (absolute
+# or gap-encoded) is never scanned.  ``term_bucket`` is the partition
+# column of ``term_document``.
+POSTINGS_BM25_SCHEMA = "term string, doc_id string, tf int, term_bucket int"
+DOC_FREQ_SCHEMA = "term string, df long"
+DOC_STATS_BM25_SCHEMA = "doc_id string, length int"
+
 
 def write_index(index: dict[str, DataFrame], base_path: str,
                 term_buckets: int = 16,
@@ -39,11 +48,11 @@ def write_index(index: dict[str, DataFrame], base_path: str,
     second time — at 100 TB that's a full extra corpus pass per index
     build.
 
-    ``delta_positions`` (r15, VERDICT r14 #7): store positions arrays
-    gap-encoded (:func:`delta_encode_positions` — the Lucene postings
-    layout).  The encoded store is SELF-DESCRIBING (r16 advice): the
-    stored column is renamed ``positions_delta``, so a reader can never
-    silently consume gap values as absolute positions — ``read_index``
+    ``delta_positions``: store positions arrays gap-encoded
+    (:func:`delta_encode_positions` — the Lucene postings layout).  The
+    encoded store is SELF-DESCRIBING: the stored column is renamed
+    ``positions_delta``, so a reader can never silently consume gap
+    values as absolute positions — ``read_index``
     auto-detects the layout from the schema and fails fast on a
     flag/layout contradiction, and ``append_to_index`` encodes each
     batch to match the live store.  The BM25 probe path never reads
@@ -94,13 +103,15 @@ def append_to_index(docs: DataFrame, base_path: str,
 
     The batch index is built from the incoming docs only — one batch
     pass, never a rebuild; at 100 TB this is the difference between a
-    nightly full-corpus index job and appending the day's crawl.
+    nightly full-corpus index job and appending the day's crawl.  It is
+    built with ``build_index(term_buckets=term_buckets)``, so the batch
+    pays the build's one exchange and lands one new file per bucket
+    directory it touches.
 
-    The batch adopts the LIVE store's positions layout (r16 advice:
-    the store is self-describing — a gap-encoded store carries
-    ``positions_delta``; appending absolute rows into it would corrupt
-    every positional consumer silently, so the batch is encoded to
-    match)."""
+    The batch adopts the LIVE store's positions layout (the store is
+    self-describing — a gap-encoded store carries ``positions_delta``;
+    appending absolute rows into it would corrupt every positional
+    consumer silently, so the batch is encoded to match)."""
     from pyspark import StorageLevel
 
     from .index import build_index
@@ -111,7 +122,7 @@ def append_to_index(docs: DataFrame, base_path: str,
     live_delta = fs.exists(hlive) and \
         "positions_delta" in spark.read.parquet(live).columns
 
-    index = build_index(docs)
+    index = build_index(docs, term_buckets=term_buckets)
     td = cached = index["term_document"].persist(
         StorageLevel.MEMORY_AND_DISK)
     if live_delta:
@@ -119,9 +130,7 @@ def append_to_index(docs: DataFrame, base_path: str,
                            delta_encode_positions("positions")) \
             .withColumnRenamed("positions", "positions_delta")
     try:
-        (td.withColumn("term_bucket", term_bucket(F.col("term"), term_buckets))
-         .repartition(F.col("term_bucket"))
-         .sortWithinPartitions("term")
+        (td.sortWithinPartitions("term")
          .write.mode("append").partitionBy("term_bucket")
          .parquet(f"{base_path}/term_document"))
         index["document_frequency"].write.mode("append") \
@@ -155,7 +164,7 @@ def delete_from_index(spark: SparkSession, base_path: str, doc_ids) -> None:
 def _index_tombstones(spark: SparkSession, base_path: str):
     """Tombstoned doc ids as a 1-column DataFrame, or None if no delete
     has ever been issued."""
-    return read_tombstones(spark, base_path, "__del_doc")
+    return read_tombstones(spark, base_path, "__del_doc", "string")
 
 
 def compact_index(spark: SparkSession, base_path: str) -> None:
@@ -295,14 +304,16 @@ def partition_postings_by_term_bucket(postings: DataFrame, path: str,
     while scans still stream ≥tens of MB per group; tests use a tiny value
     to exercise skipping on small data.
 
-    When ``postings`` already carries a ``term_bucket`` column (a
-    build_index(term_buckets=N) lineage — r18), the rows are already
-    hash-clustered on (term_bucket, term) by the build's single exchange,
-    so the writer skips its repartition outright (guide §2.4): every
-    bucket's rows are co-located and each write task emits into only the
-    bucket directories it holds.  The column's metadata pins the bucket
-    count the builder used — a mismatch with ``n_buckets`` fails fast
-    here instead of silently laying out directories probes won't find."""
+    Either way each ``term_bucket=K/`` directory gets exactly one file,
+    sorted by term.  When ``postings`` already carries a ``term_bucket``
+    column (a ``build_index(term_buckets=N)`` lineage), the build's one
+    exchange has already put every row of a bucket in one task, so the
+    writer adds no repartition: each task sorts its rows and writes one
+    file into each bucket directory it holds.  The column's metadata pins
+    the bucket count the builder used — a mismatch with ``n_buckets``
+    fails fast here instead of silently laying out directories probes
+    won't find.  Otherwise the writer tags the rows and repartitions on
+    the bucket itself."""
     if "term_bucket" in postings.columns:
         meta = postings.schema["term_bucket"].metadata or {}
         built_n = meta.get("n_buckets")
@@ -329,9 +340,15 @@ def probe_postings(spark: SparkSession, path: str, terms: list[str],
                    n_buckets: int = 16) -> DataFrame:
     """Term probe against bucket-partitioned postings: the bucket predicate
     prunes directories BEFORE any row is read — the Spark analogue of the
-    reference's single-partition Cassandra reads (`query.py:114-118`)."""
+    reference's single-partition Cassandra reads (`query.py:114-118`).
+
+    Returns (term, doc_id, tf, term_bucket): the store is read with the
+    declared :data:`POSTINGS_BM25_SCHEMA`, so the positions column is
+    dropped (never scanned, whatever its layout) and building the probe
+    launches no schema-inference job.  Positional consumers read the
+    store through :func:`read_index`."""
     buckets = sorted({_py_bucket(t, n_buckets) for t in terms})
-    df = spark.read.parquet(path)
+    df = spark.read.schema(POSTINGS_BM25_SCHEMA).parquet(path)
     return df.filter(F.col("term_bucket").isin(buckets)
                      & F.col("term").isin(terms))
 
@@ -378,13 +395,18 @@ def _bm25_probe_relations(spark: SparkSession, base_path: str,
       the probed terms' postings rows themselves (one row per
       (term, doc), so a per-term count of tombstoned rows is the exact
       correction; the rows are still on disk until compact_index).  No
-      full-index pass ever lands on the query path."""
+      full-index pass ever lands on the query path.
+    - Every relation is read with its declared schema (the module's
+      ``*_SCHEMA`` constants), so constructing a probe runs no Spark job
+      and the scans carry only the columns BM25 reads."""
     postings = probe_postings(spark, f"{base_path}/term_document", terms,
                               n_buckets).drop("term_bucket")
-    dfreq = (spark.read.parquet(f"{base_path}/document_frequency")
+    dfreq = (spark.read.schema(DOC_FREQ_SCHEMA)
+             .parquet(f"{base_path}/document_frequency")
              .filter(F.col("term").isin(terms))
              .groupBy("term").agg(F.sum("df").cast("long").alias("df")))
-    stats = spark.read.parquet(f"{base_path}/documents_info")
+    stats = spark.read.schema(DOC_STATS_BM25_SCHEMA) \
+        .parquet(f"{base_path}/documents_info")
     tomb = _index_tombstones(spark, base_path)
     if tomb is not None:
         tomb_docs = tomb.withColumnRenamed("__del_doc", "doc_id")
@@ -416,7 +438,7 @@ def bm25_probe_persisted(spark: SparkSession, base_path: str, query: str,
 def bm25_probe_persisted_batch(spark: SparkSession, base_path: str,
                                queries: dict[str, str], k: int = 10,
                                n_buckets: int = 16) -> "DataFrame":
-    """BATCHED serving-path BM25 (r13, VERDICT r12 #4): serve MANY
+    """BATCHED serving-path BM25: serve MANY
     queries from the persisted index with ONE bucket-pruned postings
     scan — the amortization a real query service runs.  The probe plans
     the UNION of all queries' terms (so the bucket-pruned scan, the df
@@ -555,7 +577,7 @@ def ivfpq_delete(spark: SparkSession, base_path: str, vec_ids) -> None:
 def _ivfpq_tombstones(spark: SparkSession, base_path: str):
     """Tombstoned vec_ids as a 1-column DataFrame, or None if no delete
     has ever been issued."""
-    return read_tombstones(spark, base_path, "__nid")
+    return read_tombstones(spark, base_path, "__nid", "bigint")
 
 
 def ivfpq_compact(spark: SparkSession, base_path: str) -> None:
@@ -644,7 +666,7 @@ def sq8_compact(spark: SparkSession, path: str) -> None:
     bit-identically to a fresh ``write_sq8`` over the surviving
     vectors — per-vector scales make the store row-independent, so
     dropping rows cannot perturb the survivors."""
-    tomb = read_tombstones(spark, path, "__nid")
+    tomb = read_tombstones(spark, path, "__nid", "bigint")
     if tomb is None:
         return
     atomic_rewrite(spark, path, "codes",
@@ -668,7 +690,8 @@ def sq8_probe_persisted(spark: SparkSession, path: str, queries: DataFrame,
     from .similarity import brute_force_topk
 
     store = mask_tombstones(spark.read.parquet(f"{path}/codes"),
-                            read_tombstones(spark, path, "__nid"), "vec_id")
+                            read_tombstones(spark, path, "__nid", "bigint"),
+                            "vec_id")
     dq = store.select(
         "vec_id",
         F.transform("codes", lambda c: c.cast("double") * F.col("scale"))

@@ -105,8 +105,7 @@ def bm25_topk_batch(spark: SparkSession, queries: dict[str, str],
     scored = (
         term_document.join(F.broadcast(terms_df), "term")
         .join(F.broadcast(
-            document_frequency.join(
-                F.broadcast(terms_df.select("term").distinct()), "term")
+            document_frequency.join(F.broadcast(terms_df), "term", "left_semi")
             .filter(F.col("df") > 0)), "term")
         .join(documents_info.select("doc_id", "length"), "doc_id")
         .crossJoin(stats)
@@ -134,7 +133,7 @@ def _bm25_scores_from_terms(terms_df: DataFrame, term_document: DataFrame,
     candidate = (
         term_document.join(F.broadcast(terms_df), "term")
         .join(F.broadcast(
-            document_frequency.join(F.broadcast(terms_df.distinct()), "term")
+            document_frequency.join(F.broadcast(terms_df), "term", "left_semi")
             .filter(F.col("df") > 0)  # P7 (`query.py:165-167`)
         ), "term")
         .join(documents_info.select("doc_id", "length"), "doc_id")

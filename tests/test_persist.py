@@ -111,6 +111,95 @@ def test_py_bucket_matches_spark(spark, index_path):
         assert _py_bucket(r["term"], 8) == int(r["term_bucket"])
 
 
+def _scala_list(seq) -> list:
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _sql_executions(spark) -> dict:
+    """The session's retained SQL executions by id."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    return {e.executionId(): e for e in _scala_list(store.executionsList())}
+
+
+def test_term_buckets_write_one_sorted_file_per_bucket(spark, sf_dir,
+                                                       tmp_path_factory):
+    """build_index(term_buckets=N) + write_index(N): the postings
+    aggregate is fed by ONE exchange, on the bucket into N partitions, and
+    the writer adds none; so every bucket directory holds exactly one
+    parquet file, sorted by term (the row-group pruning precondition)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path_factory.mktemp("ix_layout"))
+    before = _sql_executions(spark)
+    ix = build_index(load_table(spark, sf_dir, "documents"), term_buckets=8)
+    write_index(ix, path, 8)
+
+    dirs = glob.glob(f"{path}/term_document/term_bucket=*")
+    assert len(dirs) == 8
+    for d in dirs:
+        files = glob.glob(f"{d}/*.parquet")
+        assert len(files) == 1, f"{d}: {len(files)} files"
+        terms = pq.read_table(files[0], columns=["term"]) \
+            .column("term").to_pylist()
+        assert terms and terms == sorted(terms), f"{d} not sorted by term"
+
+    # the postings write: the only new execution that names its directory
+    (write,) = [i for i, e in _sql_executions(spark).items()
+                if i not in before
+                and f"{path}/term_document" in e.physicalPlanDescription()]
+    store = spark._jsparkSession.sharedState().statusStore()
+    nodes = _scala_list(store.planGraph(write).allNodes())
+    exchanges = [n.desc() for n in nodes if n.name() == "Exchange"]
+    assert len(exchanges) == 1, exchanges
+    assert "hashpartitioning(term_bucket" in exchanges[0]
+    assert any(n.name().endswith("HashAggregate") for n in nodes)
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """(fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bm25_probe_persisted_job_counts(spark, sf_dir, tmp_path_factory):
+    """The serving probe reads its relations with declared schemas:
+    building it launches no Spark job (no schema inference), with or
+    without a tombstone log, and executing it on a store without
+    tombstones launches at most 8 jobs."""
+    from big_data_assignment_2_spark.operators.persist import (
+        bm25_probe_persisted, delete_from_index)
+
+    path = str(tmp_path_factory.mktemp("ix_jobs"))
+    write_index(build_index(load_table(spark, sf_dir, "documents"),
+                            term_buckets=8), path, 8)
+    q = "vector query stream fast join"
+    probe, built = _jobs_in_group(
+        spark, "probe-build", lambda: bm25_probe_persisted(
+            spark, path, q, n_buckets=8))
+    assert built == 0
+    rows, ran = _jobs_in_group(spark, "probe-run", probe.collect)
+    assert len(rows) == 10 and ran <= 8, ran
+
+    delete_from_index(spark, path, [rows[0]["doc_id"]])
+    masked, built = _jobs_in_group(
+        spark, "probe-build-tomb", lambda: bm25_probe_persisted(
+            spark, path, q, n_buckets=8))
+    assert built == 0
+    assert rows[0]["doc_id"] not in {r["doc_id"] for r in masked.collect()}
+
+
 def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh"))
     orders = load_table(spark, sf_dir, "orders")

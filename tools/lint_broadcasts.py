@@ -88,12 +88,9 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     (f"{PKG}/operators/search.py", "bm25_topk_batch", "terms_df"):
         "query-term relation: bounded by query size",
     (f"{PKG}/operators/search.py", "bm25_topk_batch",
-     "document_frequency.join(F.broadcast(terms_df.select('term')"
-     ".distinct()), 'term').filter(F.col('df') > 0)"):
+     "document_frequency.join(F.broadcast(terms_df), 'term', 'left_semi')"
+     ".filter(F.col('df') > 0)"):
         "df FILTERED to the query's terms: bounded by query size",
-    (f"{PKG}/operators/search.py", "bm25_topk_batch",
-     "terms_df.select('term').distinct()"):
-        "query-term relation: bounded by query size",
     (f"{PKG}/operators/search.py", "_bm25_scores_from_terms",
      "documents_info.agg(F.count('*').alias('__n'), "
      "F.avg('length').alias('__avgdl'))"):
@@ -101,12 +98,9 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     (f"{PKG}/operators/search.py", "_bm25_scores_from_terms", "terms_df"):
         "query-term relation: bounded by query size",
     (f"{PKG}/operators/search.py", "_bm25_scores_from_terms",
-     "document_frequency.join(F.broadcast(terms_df.distinct()), 'term')"
+     "document_frequency.join(F.broadcast(terms_df), 'term', 'left_semi')"
      ".filter(F.col('df') > 0)"):
         "df FILTERED to the query's terms: bounded by query size",
-    (f"{PKG}/operators/search.py", "_bm25_scores_from_terms",
-     "terms_df.distinct()"):
-        "query-term relation: bounded by query size",
     (f"{PKG}/operators/search.py", "fuzzy_expand_terms", "oov"):
         "out-of-vocabulary QUERY terms: bounded by query size",
     (f"{PKG}/operators/search.py", "prefix_expand_terms", "wild"):
